@@ -55,6 +55,12 @@ object Bench {
       case _ => -1L
     }
 
+  /** The file a full run at `cpus` threads writes, and the history its
+    * retry guard reads: `bench_detail.json` for the official 32-thread
+    * width, `bench_detail_c<cpus>.json` for any other. */
+  private[graft] def historyPath(cpus: Int): String =
+    if (cpus == 32) "bench_detail.json" else s"bench_detail_c$cpus.json"
+
   /** Committed per-query history from a prior round's bench_detail.json.
     * Used only to pick retry candidates (wall > ~5× history = suspected
     * host-contention hit); absent or unparsable history disables retries.
@@ -64,7 +70,7 @@ object Bench {
     * or "cpu" (process-CPU seconds, committed since r11); the scoping
     * regex keeps the two same-keyed maps from shadowing each other.
     */
-  private def loadHistory(path: String,
+  private[graft] def loadHistory(path: String,
       key: String = "queries"): Map[String, Double] =
     try {
       val txt = new String(
@@ -133,8 +139,11 @@ object Bench {
     //       in-artifact proof of a transient external burst.
     // The FIRST timing stays the official number (retries never improve
     // the reported total — they only explain it).
+    // History comes from this width's own full capture: timings at 4
+    // threads are not comparable to 32-thread history, so a width with
+    // no capture yet runs without retries (no history ⇒ never suspect).
     val histPath =
-      sys.env.getOrElse("SPARK_GRAFT_BENCH_HISTORY", "bench_detail.json")
+      sys.env.getOrElse("SPARK_GRAFT_BENCH_HISTORY", historyPath(cpus))
     val history = loadHistory(histPath)
     // committed per-query CPU history (r11 VERDICT #1a): under a
     // SUSTAINED co-tenant burst, process-CPU time itself inflates
@@ -211,8 +220,7 @@ object Bench {
     val detailPath = java.nio.file.Paths.get(
       sys.env.getOrElse("SPARK_GRAFT_BENCH_DETAIL",
         if (only.nonEmpty) "bench_detail_partial.json"
-        else if (cpus == 32) "bench_detail.json"
-        else s"bench_detail_c$cpus.json"))
+        else historyPath(cpus)))
     def flushPrefix(done: Seq[QRes]): Unit = try {
       val qs = done.map { r =>
         "\"" + r.name + "\":" + (if (r.ok) r.wall.toString else "null") }

@@ -21,7 +21,10 @@ object Graft {
     * splitting), shuffle partitions sized to cores (not 200), UTC, and
     * the engine's native functions registered. On a cluster, pass the
     * same settings via spark-submit conf plus
-    * `spark.sql.extensions=graft.functions.GraftExtensions`.
+    * `spark.sql.extensions=graft.functions.GraftExtensions` and
+    * `spark.sql.codegen.cache.maxEntries=1000` (see [[Engine]]). The
+    * codegen cache size is a static conf read once per JVM, so it only
+    * takes effect when set before the first session is created.
     */
   def session(master: String = s"local[${Runtime.getRuntime.availableProcessors}]",
               shufflePartitions: Option[Int] = None): SparkSession = {

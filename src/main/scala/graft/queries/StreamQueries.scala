@@ -2,6 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.Bridge
 import graft.io.Tables
 import graft.streaming.StreamOps
 
@@ -9,6 +10,12 @@ import graft.streaming.StreamOps
   * (identical plans run under readStream — proven by StreamOpsSpec's
   * batch/stream parity test). Watermark/stateful paths are
   * streaming-only → unit tests, no oracle.
+  *
+  * The `q_stream_*` replays write their micro-batch source files and
+  * stream them back with the written frame's schema made nullable —
+  * what a Parquet read of those files reports (every type they carry
+  * round-trips unchanged), without the schema-inference job such a
+  * read launches.
   */
 object StreamQueries {
 
@@ -237,7 +244,7 @@ object StreamQueries {
     val now = System.currentTimeMillis()
     dataFile(s"$tmp/src/a.parquet").setLastModified(now - 60000)
     dataFile(s"$tmp/src/b.parquet").setLastModified(now)
-    val schema = spark.read.parquet(s"$tmp/src/a.parquet").schema
+    val schema = Bridge.asNullable(o.schema)
     val stream = spark.readStream.schema(schema)
       .option("maxFilesPerTrigger", 1)
       .option("basePath", s"$tmp/src")
@@ -280,7 +287,7 @@ object StreamQueries {
     val now = System.currentTimeMillis()
     dataFile(s"$tmp/src/a.parquet").setLastModified(now - 60000)
     dataFile(s"$tmp/src/b.parquet").setLastModified(now)
-    val schema = spark.read.parquet(s"$tmp/src/a.parquet").schema
+    val schema = Bridge.asNullable(docs.schema)
     val stream = spark.readStream.schema(schema)
       .option("maxFilesPerTrigger", 1)
       .option("basePath", s"$tmp/src")
@@ -313,7 +320,7 @@ object StreamQueries {
     val now = System.currentTimeMillis()
     dataFile(s"$tmp/src/a.parquet").setLastModified(now - 60000)
     dataFile(s"$tmp/src/b.parquet").setLastModified(now)
-    val schema = spark.read.parquet(s"$tmp/src/a.parquet").schema
+    val schema = Bridge.asNullable(docs.schema)
     val stream = spark.readStream.schema(schema)
       .option("maxFilesPerTrigger", 1)
       .option("basePath", s"$tmp/src")
@@ -566,7 +573,7 @@ object StreamQueries {
     val now = System.currentTimeMillis()
     dataFile(s"$tmp/src/a.parquet").setLastModified(now - 60000)
     dataFile(s"$tmp/src/b.parquet").setLastModified(now)
-    val schema = spark.read.parquet(s"$tmp/src/a.parquet").schema
+    val schema = Bridge.asNullable(ev.schema)
     val stream = spark.readStream.schema(schema)
       .option("maxFilesPerTrigger", 1)
       .option("basePath", s"$tmp/src")
@@ -612,7 +619,7 @@ object StreamQueries {
     val now = System.currentTimeMillis()
     dataFile(s"$tmp/src/a.parquet").setLastModified(now - 60000)
     dataFile(s"$tmp/src/b.parquet").setLastModified(now)
-    val schema = spark.read.parquet(s"$tmp/src/a.parquet").schema
+    val schema = Bridge.asNullable(ev.schema)
     val stream = spark.readStream.schema(schema)
       .option("maxFilesPerTrigger", 1)
       .option("basePath", s"$tmp/src")
@@ -657,7 +664,7 @@ object StreamQueries {
     val now = System.currentTimeMillis()
     dataFile(s"$tmp/src/a.parquet").setLastModified(now - 60000)
     dataFile(s"$tmp/src/b.parquet").setLastModified(now)
-    val schema = spark.read.parquet(s"$tmp/src/a.parquet").schema
+    val schema = Bridge.asNullable(ev.schema)
     StreamOps.withRocksDb(spark) {
       val stream = spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", 1)
@@ -703,7 +710,7 @@ object StreamQueries {
     val now = System.currentTimeMillis()
     dataFile(s"$tmp/src/a.parquet").setLastModified(now - 60000)
     dataFile(s"$tmp/src/b.parquet").setLastModified(now)
-    val schema = spark.read.parquet(s"$tmp/src/a.parquet").schema
+    val schema = Bridge.asNullable(ev.schema)
     StreamOps.withRocksDb(spark) {
       val stream = spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", 1)
@@ -752,7 +759,7 @@ object StreamQueries {
     val now = System.currentTimeMillis()
     dataFile(s"$tmp/src/a.parquet").setLastModified(now - 60000)
     dataFile(s"$tmp/src/b.parquet").setLastModified(now)
-    val schema = spark.read.parquet(s"$tmp/src/a.parquet").schema
+    val schema = Bridge.asNullable(ev.schema)
     val stream = spark.readStream.schema(schema)
       .option("maxFilesPerTrigger", 1)
       .option("basePath", s"$tmp/src")
@@ -799,7 +806,7 @@ object StreamQueries {
     val now = System.currentTimeMillis()
     dataFile(s"$tmp/src/a.parquet").setLastModified(now - 60000)
     dataFile(s"$tmp/src/b.parquet").setLastModified(now)
-    val schema = spark.read.parquet(s"$tmp/src/a.parquet").schema
+    val schema = Bridge.asNullable(ev.schema)
     val stream = spark.readStream.schema(schema)
       .option("maxFilesPerTrigger", 1)
       .option("basePath", s"$tmp/src")
@@ -847,7 +854,7 @@ object StreamQueries {
     val now = System.currentTimeMillis()
     dataFile(s"$tmp/src/a.parquet").setLastModified(now - 60000)
     dataFile(s"$tmp/src/b.parquet").setLastModified(now)
-    val schema = spark.read.parquet(s"$tmp/src/a.parquet").schema
+    val schema = Bridge.asNullable(ev.schema)
     val stream = spark.readStream.schema(schema)
       .option("maxFilesPerTrigger", 1)
       .option("basePath", s"$tmp/src")
@@ -898,7 +905,7 @@ object StreamQueries {
     val now = System.currentTimeMillis()
     dataFile(s"$tmp/src/a.parquet").setLastModified(now - 60000)
     dataFile(s"$tmp/src/b.parquet").setLastModified(now)
-    val schema = spark.read.parquet(s"$tmp/src/a.parquet").schema
+    val schema = Bridge.asNullable(ev.schema)
     val stream = spark.readStream.schema(schema)
       .option("maxFilesPerTrigger", 1)
       .option("basePath", s"$tmp/src")
@@ -953,7 +960,7 @@ object StreamQueries {
     val now = System.currentTimeMillis()
     dataFile(s"$tmp/src/a.parquet").setLastModified(now - 60000)
     dataFile(s"$tmp/src/b.parquet").setLastModified(now)
-    val schema = spark.read.parquet(s"$tmp/src/a.parquet").schema
+    val schema = Bridge.asNullable(ev.schema)
     val stream = spark.readStream.schema(schema)
       .option("maxFilesPerTrigger", 1)
       .option("basePath", s"$tmp/src")
@@ -1936,7 +1943,7 @@ object StreamQueries {
     val now = System.currentTimeMillis()
     dataFile(s"$tmp/src/a.parquet").setLastModified(now - 60000)
     dataFile(s"$tmp/src/b.parquet").setLastModified(now)
-    val schema = spark.read.parquet(s"$tmp/src/a.parquet").schema
+    val schema = Bridge.asNullable(ev.schema)
     StreamOps.funnelSink(
       spark.readStream.schema(schema).option("maxFilesPerTrigger", 1)
         .option("basePath", s"$tmp/src").parquet(s"$tmp/src/*"),
@@ -1972,7 +1979,7 @@ object StreamQueries {
     val now = System.currentTimeMillis()
     dataFile(s"$tmp/src/a.parquet").setLastModified(now - 60000)
     dataFile(s"$tmp/src/b.parquet").setLastModified(now)
-    val schema = spark.read.parquet(s"$tmp/src/a.parquet").schema
+    val schema = Bridge.asNullable(ev.schema)
     val stream = spark.readStream.schema(schema)
       .option("maxFilesPerTrigger", 1)
       .option("basePath", s"$tmp/src").parquet(s"$tmp/src/*")
@@ -2000,15 +2007,15 @@ object StreamQueries {
     val del = o.filter(col("o_orderkey") % 5 === 0)
       .select(col("o_orderkey").as("k"), lit(3L).as("seq"),
         lit("D").as("op"), lit(null).cast("double").as("price"))
-    upd.unionByName(del).coalesce(1)
-      .write.parquet(s"$tmp/src/a.parquet")
+    val a = upd.unionByName(del)
+    a.coalesce(1).write.parquet(s"$tmp/src/a.parquet")
     ins.coalesce(1).write.parquet(s"$tmp/src/b.parquet")
     def dataFile(d: String) = new java.io.File(d).listFiles()
       .filter(_.getName.endsWith(".parquet")).head
     val now = System.currentTimeMillis()
     dataFile(s"$tmp/src/a.parquet").setLastModified(now - 60000)
     dataFile(s"$tmp/src/b.parquet").setLastModified(now)
-    val schema = spark.read.parquet(s"$tmp/src/a.parquet").schema
+    val schema = Bridge.asNullable(a.schema)
     StreamOps.cdcSink(
       spark.readStream.schema(schema).option("maxFilesPerTrigger", 1)
         .option("basePath", s"$tmp/src").parquet(s"$tmp/src/*"),
@@ -2041,7 +2048,7 @@ object StreamQueries {
     val now = System.currentTimeMillis()
     dataFile(s"$tmp/src/a.parquet").setLastModified(now - 60000)
     dataFile(s"$tmp/src/b.parquet").setLastModified(now)
-    val schema = spark.read.parquet(s"$tmp/src/a.parquet").schema
+    val schema = Bridge.asNullable(ev.schema)
     StreamOps.aggSink(
       spark.readStream.schema(schema).option("maxFilesPerTrigger", 1)
         .option("basePath", s"$tmp/src").parquet(s"$tmp/src/*")
@@ -2073,11 +2080,11 @@ object StreamQueries {
       .select(col("o_custkey").as("k"), col("o_orderdate").as("t"),
         lit(0).as("side"), col("v"))
       .write.parquet(s"$tmp/src/right.parquet")
-    Tables.events(spark, dir)
+    val left = Tables.events(spark, dir)
       .select(col("user_id").as("k"), col("ts").as("t"),
         lit(1).as("side"), col("event_id").as("v"))
-      .write.parquet(s"$tmp/src/left.parquet")
-    val schema = spark.read.parquet(s"$tmp/src/left.parquet").schema
+    left.write.parquet(s"$tmp/src/left.parquet")
+    val schema = Bridge.asNullable(left.schema)
     val stream = spark.readStream.schema(schema)
       .option("basePath", s"$tmp/src").parquet(s"$tmp/src/*")
     import spark.implicits._

@@ -1,6 +1,8 @@
 package graft.io
 
 import graft.SparkTestBase
+import org.apache.spark.graft.SparkInternals
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.TimestampType
 
@@ -63,5 +65,67 @@ class TablesSpec extends SparkTestBase {
     assert(micros.exceptAll(nanos).count() == 0 &&
       nanos.exceptAll(micros).count() == 0,
       "the two physical encodings of the same rows must load identically")
+  }
+
+  /** Spark jobs launched while `body` runs (listener bus drained on both
+    * sides, so no event is missed or carried over). */
+  private def jobsDuring[T](body: => T): (T, Int) = {
+    val sc = spark.sparkContext
+    SparkInternals.drainListenerBus(sc)
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val l = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        jobs.incrementAndGet(): Unit
+    }
+    sc.addSparkListener(l)
+    try {
+      val out = body
+      SparkInternals.drainListenerBus(sc)
+      (out, jobs.get)
+    } finally sc.removeSparkListener(l)
+  }
+
+  private def scratchDir(): String =
+    java.nio.file.Files.createTempDirectory("tables-spec").toString
+
+  test("schema memo: re-loading an unchanged file launches no job") {
+    import spark.implicits._
+    val dir = scratchDir()
+    Seq((1L, "a"), (2L, "b"), (3L, null)).toDF("k", "v")
+      .write.parquet(s"$dir/t.parquet")
+    val first = Tables.load(spark, dir, "t")
+    val (second, jobs) = jobsDuring(Tables.load(spark, dir, "t"))
+    assert(jobs == 0, s"second load of an unchanged file ran $jobs job(s)")
+    assert(second.schema == first.schema)
+    assert(second.orderBy("k").collect().toSeq ==
+      first.orderBy("k").collect().toSeq)
+  }
+
+  test("schema memo: a file overwritten with a new schema is re-inferred") {
+    import spark.implicits._
+    val dir = scratchDir()
+    Seq((1L, "a")).toDF("k", "v").write.parquet(s"$dir/t.parquet")
+    assert(Tables.load(spark, dir, "t").columns.toSeq == Seq("k", "v"))
+    Seq((7, 2.5, "x"), (8, 3.5, "y")).toDF("id", "score", "tag")
+      .write.mode("overwrite").parquet(s"$dir/t.parquet")
+    val df = Tables.load(spark, dir, "t")
+    assert(df.columns.toSeq == Seq("id", "score", "tag"),
+      s"stale schema after overwrite: ${df.schema.simpleString}")
+    assert(df.orderBy("id").as[(Int, Double, String)].collect().toSeq ==
+      Seq((7, 2.5, "x"), (8, 3.5, "y")))
+  }
+
+  test("schema memo: nanos and micros fixtures load in either order") {
+    def tsOf(name: String) = loaded(name)
+      .select(col("event_id"), unix_micros(col("ts")))
+      .orderBy("event_id").collect().map(r => r.getLong(1)).toSeq
+    val micros = tsOf("events_micros.parquet")
+    val nanos = tsOf("events_nanos.parquet")
+    assert(micros.size == 6 && micros == nanos)
+    for (order <- Seq(
+        Seq("events_nanos.parquet", "events_micros.parquet"),
+        Seq("events_micros.parquet", "events_nanos.parquet"));
+        name <- order)
+      assert(tsOf(name) == micros, s"$name after ${order.mkString(", ")}")
   }
 }
